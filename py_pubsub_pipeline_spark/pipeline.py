@@ -12,9 +12,14 @@ Streaming:
                             P:27-28); Column-expression fast path via
                             F.from_json/to_json when a schema is given
 - processor              -> Column expressions (Catalyst-visible) or
-                            opaque Python via Arrow-batched mapInPandas;
-                            the bulk variant (P:214-242) is the natural
-                            shape here: one Python call per Arrow batch
+                            opaque Python, one call per Arrow batch for
+                            the bulk variant (P:214-242); run on the
+                            driver inside foreachBatch for sources whose
+                            micro-batches are prefetched there
+                            (PubSubStreamSource), as the reference
+                            processes a pull where it pulled it
+                            (P:74-84); else on executors through
+                            mapInPandas (FileStreamSource)
 - publish + ack-after    -> foreachBatch(sink): Structured Streaming
                             commits source offsets to the checkpoint
                             only AFTER the batch sink returns — same
@@ -38,6 +43,7 @@ import json
 import logging
 import os
 import signal
+import threading
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
@@ -83,6 +89,10 @@ class FileStreamSource:
 
     Emits the Kafka-style column convention: value BINARY.
     """
+
+    # A trigger may admit many files read in parallel on executors, so
+    # SparkPipeline runs a Python processor there (see SparkPipeline).
+    driver_resident = False
 
     def __init__(self, path: str, max_files_per_trigger: int | None = 20):
         self.path = path
@@ -375,8 +385,10 @@ class MorUpsertSink:
         for c in live:
             d = _read_data(c["data"]).withColumn(
                 "__seq", F.lit(c["seq"]).cast("long"))
+            # Names compare as sets: parquet and unionByName resolve
+            # columns by name, so a reordered commit reads correctly.
             want = c.get("fields")
-            if want is not None and want != data_schema.fieldNames():
+            if want is not None and set(want) != set(data_schema.fieldNames()):
                 raise ValueError(
                     f"MoR schema drift at seq {c['seq']}: commit "
                     f"recorded columns {want} but the snapshot "
@@ -523,8 +535,15 @@ class PipelineMetricsListener:
     pull P:143-145, process/publish P:156-158, ack P:178-184). The
     Structured-Streaming analog is a StreamingQueryListener: one
     progress event per micro-batch carrying rows-in, per-stage
-    durations, and — via the Dataset.observe() hook installed by
-    SparkPipeline — the exact rows-out count the sink published.
+    durations, and the exact rows-out count the sink published — from
+    the Dataset.observe() hook SparkPipeline installs on the executor
+    path, or from the counts the driver path reports (``count_batch``).
+
+    A listener sees every query in the session, so the collector is
+    scoped to one query: ``bind`` names it, events of other queries are
+    dropped, and the listener removes itself once that query
+    terminates.  Events that arrive between ``attach`` and ``bind`` are
+    kept with their query id and filtered at ``bind``.
 
     Collected records (``batches``) are plain dicts, queryable by
     tests and ops tooling; each batch also logs one line at the
@@ -533,23 +552,76 @@ class PipelineMetricsListener:
 
     def __init__(self) -> None:
         self.batches: list[dict] = []
-        self.terminated: dict | None = None
+        self.query_id: str | None = None
+        self._terminated: dict[str, dict] = {}
+        self._counted: dict[int, dict] = {}
+        self._lock = threading.Lock()
         self._delegate = None
+        self._streams = None
+
+    @property
+    def terminated(self) -> dict | None:
+        return self._terminated.get(self.query_id)
+
+    def _owns(self, query_id: str) -> bool:
+        return self.query_id is None or self.query_id == query_id
+
+    # -- lifecycle, driven by SparkPipeline.process() --
+
+    def attach(self, spark: SparkSession) -> None:
+        """Register with the session for a new run; call before the
+        query starts so its first events are not missed.  Batches of
+        earlier runs stay; their terminated state is cleared."""
+        with self._lock:
+            self._terminated = {}
+        self._streams = spark.streams
+        self._streams.addListener(self._listener())
+
+    def bind(self, query_id: str) -> None:
+        """Scope the collector to ``query_id`` (known once start()
+        returns) and drop what other queries posted before that."""
+        with self._lock:
+            self.query_id = query_id
+            self.batches = [b for b in self.batches
+                            if b["query_id"] == query_id]
+            self._terminated = {k: v for k, v in self._terminated.items()
+                                if k == query_id}
+        if self.terminated is not None:
+            self.detach()
+
+    def detach(self) -> None:
+        with self._lock:
+            streams, self._streams = self._streams, None
+        if streams is not None:
+            streams.removeListener(self._delegate)
+
+    def count_batch(self, batch_id: int, rows_out: int, rows_dlq: int) -> None:
+        """Rows published / quarantined by a batch processed on the
+        driver; merged into that batch's progress record."""
+        with self._lock:
+            self._counted[batch_id] = {"rows_out": rows_out,
+                                       "rows_dlq": rows_dlq}
 
     # -- StreamingQueryListener protocol (duck-typed via _listener()) --
 
     def _on_progress(self, progress) -> None:  # noqa: ANN001
+        query_id = str(progress.id)
         observed = progress.observedMetrics.get("pipeline")
         obs = observed.asDict() if observed is not None else {}
-        rec = {
-            "batch_id": progress.batchId,
-            "rows_in": progress.numInputRows,
-            "rows_out": obs.get("rows_out"),
-            "rows_dlq": obs.get("rows_dlq") or 0,
-            "duration_ms": dict(progress.durationMs or {}),
-            "timestamp": progress.timestamp,
-        }
-        self.batches.append(rec)
+        with self._lock:
+            if not self._owns(query_id):
+                return
+            obs = self._counted.pop(progress.batchId, obs)
+            rec = {
+                "query_id": query_id,
+                "batch_id": progress.batchId,
+                "rows_in": progress.numInputRows,
+                "rows_out": obs.get("rows_out"),
+                "rows_dlq": obs.get("rows_dlq") or 0,
+                "duration_ms": dict(progress.durationMs or {}),
+                "timestamp": progress.timestamp,
+            }
+            self.batches.append(rec)
         log.info(
             "batch %d: pulled %d, published %s, committed "
             "(addBatch %sms, commitOffsets %sms)",
@@ -559,21 +631,27 @@ class PipelineMetricsListener:
         )
 
     def _on_terminated(self, event) -> None:  # noqa: ANN001
-        self.terminated = {
-            "query_id": str(event.id),
-            "exception": event.exception,
-            "committed": event.exception is None,
-        }
+        query_id = str(event.id)
+        with self._lock:
+            if not self._owns(query_id):
+                return
+            self._terminated[query_id] = {
+                "query_id": query_id,
+                "exception": event.exception,
+                "committed": event.exception is None,
+            }
+            bound = self.query_id is not None
         if event.exception is None:
             log.info("query %s terminated cleanly", event.id)
         else:
             log.error("query %s FAILED (batch not committed): %s",
                       event.id, event.exception)
+        if bound:
+            self.detach()
 
     def _listener(self):  # noqa: ANN202
-        """Build the pyspark StreamingQueryListener wrapping this
-        collector (kept separate so the collector itself stays a plain
-        picklable object with no JVM references)."""
+        """Build (once) the pyspark StreamingQueryListener that
+        forwards events to this collector."""
         if self._delegate is not None:
             return self._delegate
         from pyspark.sql.streaming import StreamingQueryListener
@@ -638,15 +716,33 @@ class GracefulKiller:
 # ------------------------------------------------------------- pipeline
 
 
+def _quarantine(bad: DataFrame, epoch_id: int, dlq: str) -> None:
+    """Append a batch's poison rows (value = original payload, error)
+    to the dead-letter directory, tagged with the batch id."""
+    (
+        bad.select("value", "error", F.lit(epoch_id).alias("batch_id"))
+        .write.mode("append")
+        .parquet(dlq)
+    )
+
+
 @dataclass
 class SparkPipeline:
     """Structured-Streaming port of PubSubPipeline / BulkPubSubPipeline
     (ctor contract at P:61-73, P:97-130).
 
     processor: opaque Python Callable[[A], B] (P:62), or with
-        bulk=True Callable[[list[A]], list[B]] (P:216); applied via
-        Arrow-batched mapInPandas — one Python invocation per batch,
-        the reference's Bulk amortization (P:225-231) for free.
+        bulk=True Callable[[list[A]], list[B]] (P:216); one Python
+        invocation per Arrow batch, the reference's Bulk amortization
+        (P:225-231) for free.  Where it runs depends on the source's
+        ``driver_resident`` class attribute.  True (PubSubStreamSource):
+        each micro-batch is already on the driver as one small
+        partition, so it runs there inside foreachBatch — shipping it
+        to a Python worker would cost more than the work itself.
+        False or absent (FileStreamSource): a trigger may admit many
+        files, so it runs on executors through mapInPandas.  Both
+        paths run the same batch function (``_batch_fn``) inside
+        foreachBatch's call, before the offset commit.
     column_processor: the Spark-first fast path — a function
         DataFrame -> DataFrame over the decoded frame; stays JVM-side,
         Catalyst sees through it. Mutually exclusive with processor.
@@ -676,20 +772,20 @@ class SparkPipeline:
         default_factory=PipelineMetricsListener
     )
 
-    def _transformed(self) -> DataFrame:
-        from .session import ensure_package_on_workers
+    def _on_driver(self) -> bool:
+        """True when the Python processor runs on the driver: the
+        source declares that its micro-batches already live there."""
+        return self.column_processor is None and getattr(
+            self.source, "driver_resident", False)
 
-        ensure_package_on_workers(self.spark)
-        df = self.source.read_stream(self.spark)
-        if self.column_processor is not None:
-            if self.dead_letter_dir is not None:
-                raise ValueError(
-                    "dead_letter_dir applies to the Python processor path; "
-                    "for column_processor pipelines use from_json's "
-                    "_corrupt_record / try_* expressions instead"
-                )
-            return self.column_processor(df)
-
+    def _batch_fn(self) -> Callable[[list[bytes]], tuple[list, list]]:
+        """The per-batch work both paths share: decode -> processor
+        (plain or bulk) -> encode over one batch of raw payloads.
+        Returns (values, errors); errors[i] is None for a result to
+        publish.  With a dead-letter queue, a message whose decode/
+        process/encode raises keeps its original payload in values[i]
+        and the error text in errors[i].  Closes over plain values
+        only, so mapInPandas can ship it to executors."""
         deserialize = self.message_deserializer
         serialize = self.result_serializer
         processor = self.processor or (lambda x: x)
@@ -703,45 +799,138 @@ class SparkPipeline:
                 else processor(deserialize(raw))
             )
 
+        def run_batch(raws: list[bytes]) -> tuple[list, list]:
+            errors: list[str | None] = [None] * len(raws)
+            try:
+                payloads = [deserialize(r) for r in raws]
+                if is_bulk:
+                    results = processor(payloads)
+                    if len(results) != len(payloads):
+                        # Divergence from P:232 (silent zip truncation):
+                        raise ValueError(
+                            "bulk processor returned "
+                            f"{len(results)} results for {len(payloads)} inputs"
+                        )
+                else:
+                    results = [processor(p) for p in payloads]
+                values = [serialize(r) for r in results]
+            except Exception:
+                if not quarantine:
+                    raise
+                # Poison isolation: re-run per message (bulk
+                # processors get singleton lists — same contract);
+                # failures keep the ORIGINAL payload + the error.
+                values, errors = [], []
+                for raw in raws:
+                    try:
+                        values.append(one(raw))
+                        errors.append(None)
+                    except Exception as e:  # noqa: BLE001
+                        values.append(raw)
+                        errors.append(f"{type(e).__name__}: {e}")
+            return values, errors
+
+        return run_batch
+
+    def _transformed(self) -> DataFrame:
+        from .session import ensure_package_on_workers
+
+        ensure_package_on_workers(self.spark)
+        df = self.source.read_stream(self.spark)
+        if self.column_processor is not None:
+            if self.dead_letter_dir is not None:
+                raise ValueError(
+                    "dead_letter_dir applies to the Python processor path; "
+                    "for column_processor pipelines use from_json's "
+                    "_corrupt_record / try_* expressions instead"
+                )
+            return self.column_processor(df)
+        if self._on_driver():
+            return df
+
+        run_batch = self._batch_fn()
+
         def run_batches(batches: Iterator) -> Iterator:  # pandas iterator
             import pandas as pd
 
             for pdf in batches:
-                raws = [bytes(v) for v in pdf["value"]]
-                values: list[bytes]
-                errors: list[str | None] = [None] * len(raws)
-                try:
-                    payloads = [deserialize(r) for r in raws]
-                    if is_bulk:
-                        results = processor(payloads)
-                        if len(results) != len(payloads):
-                            # Divergence from P:232 (silent zip truncation):
-                            raise ValueError(
-                                "bulk processor returned "
-                                f"{len(results)} results for {len(payloads)} inputs"
-                            )
-                    else:
-                        results = [processor(p) for p in payloads]
-                    values = [serialize(r) for r in results]
-                except Exception:
-                    if not quarantine:
-                        raise
-                    # Poison isolation: re-run per message (bulk
-                    # processors get singleton lists — same contract);
-                    # failures keep the ORIGINAL payload + the error.
-                    values, errors = [], []
-                    for raw in raws:
-                        try:
-                            values.append(one(raw))
-                            errors.append(None)
-                        except Exception as e:  # noqa: BLE001
-                            values.append(raw)
-                            errors.append(f"{type(e).__name__}: {e}")
+                values, errors = run_batch([bytes(v) for v in pdf["value"]])
                 yield pd.DataFrame(
                     {"value": values, "error": pd.array(errors, dtype=object)}
                 )
 
         return df.mapInPandas(run_batches, "value binary, error string")
+
+    def _driver_sink(self) -> Callable[[DataFrame, int], None]:
+        """foreachBatch function of the driver path.  The micro-batch
+        is already on the driver as one partition, so it is pulled as
+        Arrow and processed here by the shared batch function; the
+        sink gets a one-partition frame of the good rows.  No
+        Python-worker task runs in the trigger, and nothing re-runs the
+        processor, so no persist is needed."""
+        import pyarrow as pa
+
+        run_batch = self._batch_fn()
+        inner, dlq, metrics = self.sink, self.dead_letter_dir, self.metrics
+
+        def sink_fn(batch_df: DataFrame, epoch_id: int) -> None:
+            spark = batch_df.sparkSession
+            raws = batch_df.toArrow().column("value").to_pylist()
+            values, errors = run_batch(raws)
+            good = [v for v, e in zip(values, errors) if e is None]
+            bad = [(v, e) for v, e in zip(values, errors) if e is not None]
+            if bad:
+                _quarantine(spark.createDataFrame(pa.table({
+                    "value": pa.array([v for v, _ in bad], pa.binary()),
+                    "error": pa.array([e for _, e in bad], pa.string()),
+                })), epoch_id, dlq)
+            inner(spark.createDataFrame(
+                pa.table({"value": pa.array(good, pa.binary())})), epoch_id)
+            metrics.count_batch(epoch_id, len(good), len(bad))
+
+        return sink_fn
+
+    def _executor_sink(
+        self, out: DataFrame,
+    ) -> tuple[DataFrame, Callable[[DataFrame, int], None]]:
+        """The observed stream and foreachBatch function of the
+        executor path: observe() rides the batch itself (no extra
+        job), so the exact published-row count lands in each progress
+        event (foreachBatch sinks otherwise report no output-row
+        metric)."""
+        has_error_col = "error" in out.columns
+        if has_error_col:
+            bad = F.col("error").isNotNull()
+            obs = [F.count_if(~bad).alias("rows_out"),
+                   F.count_if(bad).alias("rows_dlq")]
+        else:
+            obs = [F.count(F.lit(1)).alias("rows_out")]
+        out = out.observe("pipeline", *obs)
+        if not has_error_col:
+            return out, self.sink
+        inner, dlq = self.sink, self.dead_letter_dir
+
+        def sink_fn(batch_df: DataFrame, epoch_id: int) -> None:
+            # Persist: the DLQ write and the sink must not re-run
+            # the processor (double side effects) for each action.
+            batch_df.persist()
+            try:
+                if dlq is not None:
+                    bad = batch_df.filter(F.col("error").isNotNull())
+                    if bad.limit(1).count():
+                        _quarantine(bad, epoch_id, dlq)
+                # The user sink keeps its value-only contract; the
+                # DLQ write above happens first, so a sink failure
+                # still aborts the batch AFTER quarantine is durable.
+                inner(
+                    batch_df.filter(F.col("error").isNull())
+                    .select("value"),
+                    epoch_id,
+                )
+            finally:
+                batch_df.unpersist()
+
+        return out, sink_fn
 
     def process(
         self,
@@ -756,57 +945,22 @@ class SparkPipeline:
         trigger, because the latter stops after a single batch of a
         rate-capped custom source). False runs continuously until
         stop()/signal. Returns the StreamingQuery."""
-        # observe() rides the batch itself (no extra job): the exact
-        # published-row count lands in each progress event, which the
-        # metrics listener collects (R13; foreachBatch sinks otherwise
-        # report no output-row metric).
         out = self._transformed()
-        has_error_col = "error" in out.columns
-        obs = [F.count(F.lit(1)).alias("rows_out")]
-        if has_error_col:
-            obs.append(
-                F.sum(
-                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                ).alias("rows_dlq")
-            )
-        out = out.observe("pipeline", *obs)
+        if self._on_driver():
+            sink_fn = self._driver_sink()
+        else:
+            out, sink_fn = self._executor_sink(out)
 
-        sink_fn = self.sink
-        if has_error_col:
-            inner, dlq = self.sink, self.dead_letter_dir
-
-            def sink_fn(batch_df: DataFrame, epoch_id: int) -> None:
-                # Persist: the DLQ write and the sink must not re-run
-                # the processor (double side effects) for each action.
-                batch_df.persist()
-                try:
-                    if dlq is not None:
-                        bad = batch_df.filter(F.col("error").isNotNull())
-                        if bad.limit(1).count():
-                            (
-                                bad.select(
-                                    "value", "error",
-                                    F.lit(epoch_id).alias("batch_id"),
-                                )
-                                .write.mode("append")
-                                .parquet(dlq)
-                            )
-                    # The user sink keeps its value-only contract; the
-                    # DLQ write above happens first, so a sink failure
-                    # still aborts the batch AFTER quarantine is durable.
-                    inner(
-                        batch_df.filter(F.col("error").isNull())
-                        .select("value"),
-                        epoch_id,
-                    )
-                finally:
-                    batch_df.unpersist()
-
-        self.spark.streams.addListener(self.metrics._listener())
         writer = out.writeStream.foreachBatch(sink_fn)
         if self.checkpoint_dir:
             writer = writer.option("checkpointLocation", self.checkpoint_dir)
-        query = writer.start()
+        self.metrics.attach(self.spark)
+        try:
+            query = writer.start()
+        except BaseException:
+            self.metrics.detach()
+            raise
+        self.metrics.bind(str(query.id))
         self.killer.watch(query)
         if available_now:
             try:
@@ -825,5 +979,5 @@ class SparkPipeline:
                     if self.metrics.terminated is not None:
                         break
                     _t.sleep(0.1)
-                self.spark.streams.removeListener(self.metrics._listener())
+                self.metrics.detach()
         return query

@@ -360,6 +360,12 @@ class PubSubStreamSource:
     """pipeline.SparkPipeline-compatible source wrapper (same duck type
     as FileStreamSource): value BINARY out of a pubsub_dir topic."""
 
+    # The simple stream reader prefetches each micro-batch on the
+    # driver as one partition of at most bulk_limit rows, so
+    # SparkPipeline runs a Python processor there rather than shipping
+    # the batch to a Python worker.
+    driver_resident = True
+
     def __init__(
         self,
         topic_dir: str,

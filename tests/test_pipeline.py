@@ -16,8 +16,13 @@ from py_pubsub_pipeline_spark.pipeline import (
     IdempotentParquetSink,
     SparkPipeline,
 )
+from py_pubsub_pipeline_spark.sources.pubsub import PubSubStreamSource, publish
 
 MSG = {"data": "someData", "nested": {"nestedData": "someNestedData"}}  # T:28-34
+
+# The two processor placements: FileStreamSource runs the processor on
+# executors (mapInPandas), PubSubStreamSource on the driver.
+SOURCES = ["file", "pubsub"]
 
 
 def _drop(dirpath: str, n: int, start: int = 0) -> None:
@@ -27,14 +32,32 @@ def _drop(dirpath: str, n: int, start: int = 0) -> None:
             f.write(json.dumps({**MSG, "i": i}) + "\n")
 
 
-def _pipeline(spark, tmp, sink, processor=None, bulk=False):
+def _source(kind: str, dirpath: str, n: int, poison: bytes | None = None):
+    """n messages {**MSG, "i": i}, then ``poison`` if given, on a
+    drop directory (kind "file") or a pubsub_dir topic ("pubsub")."""
+    if kind == "file":
+        _drop(dirpath, n)
+        if poison is not None:
+            with open(os.path.join(dirpath, "msg_zz_bad.json"), "wb") as f:
+                f.write(poison + b"\n")
+        return FileStreamSource(dirpath)
+    for i in range(n):
+        publish(dirpath, json.dumps({**MSG, "i": i}).encode())
+    if poison is not None:
+        publish(dirpath, poison)
+    return PubSubStreamSource(dirpath)
+
+
+def _pipeline(spark, tmp, sink, processor=None, bulk=False, source=None,
+              **kw):
     return SparkPipeline(
         spark=spark,
-        source=FileStreamSource(os.path.join(tmp, "in")),
+        source=source or FileStreamSource(os.path.join(tmp, "in")),
         sink=sink,
         processor=processor,
         bulk=bulk,
         checkpoint_dir=os.path.join(tmp, "ckpt"),
+        **kw,
     )
 
 
@@ -163,11 +186,11 @@ def test_metrics_listener_marks_failed_run_uncommitted(spark, tmp_path):
     assert "sink failure" in (pipe.metrics.terminated["exception"] or "")
 
 
-def test_bulk_processor_one_call_per_batch(spark, tmp_path):
+@pytest.mark.parametrize("kind", SOURCES)
+def test_bulk_processor_one_call_per_batch(spark, tmp_path, kind):
     """BulkPubSubPipeline parity (P:214-242): processor receives the
     whole batch as a list and returns a same-length list."""
     tmp = str(tmp_path)
-    _drop(os.path.join(tmp, "in"), 4)
 
     def bulk_proc(batch):
         # record the batch size each call saw (closure state would stay
@@ -175,43 +198,43 @@ def test_bulk_processor_one_call_per_batch(spark, tmp_path):
         return [{"n": len(batch), "i": m["i"]} for m in batch]
 
     sink = CollectingSink()
-    _pipeline(spark, tmp, sink, processor=bulk_proc, bulk=True).process()
+    _pipeline(spark, tmp, sink, processor=bulk_proc, bulk=True,
+              source=_source(kind, os.path.join(tmp, "in"), 4)).process()
     out = sorted((json.loads(bytes(r)) for r in sink.rows), key=lambda d: d["i"])
     assert [d["i"] for d in out] == [0, 1, 2, 3]
     assert all(d["n"] >= 1 for d in out)
     # every message was covered by exactly the calls that reported it:
     assert sum(1.0 / d["n"] for d in out) <= 4.0
 
-def test_bulk_length_mismatch_raises(spark, tmp_path):
+
+@pytest.mark.parametrize("kind", SOURCES)
+def test_bulk_length_mismatch_raises(spark, tmp_path, kind):
     """Divergence from P:232 (silent zip truncation): a bulk processor
     returning the wrong cardinality fails loudly."""
     tmp = str(tmp_path)
-    _drop(os.path.join(tmp, "in"), 3)
     with pytest.raises(Exception, match="bulk processor returned"):
         _pipeline(
-            spark, tmp, CollectingSink(), processor=lambda b: b[:-1], bulk=True
+            spark, tmp, CollectingSink(), processor=lambda b: b[:-1], bulk=True,
+            source=_source(kind, os.path.join(tmp, "in"), 3),
         ).process()
 
 
-def test_dead_letter_quarantines_poison_and_batch_commits(spark, tmp_path):
+@pytest.mark.parametrize("kind", SOURCES)
+def test_dead_letter_quarantines_poison_and_batch_commits(
+    spark, tmp_path, kind
+):
     """A malformed message must not stall the stream: with
     dead_letter_dir set, the poison row is quarantined (original
-    payload + error, durable BEFORE the sink runs), the good rows
-    publish, and the batch COMMITS — the stream progresses."""
+    payload + error + batch id, durable BEFORE the sink runs), the
+    good rows publish, and the batch COMMITS — the stream
+    progresses."""
     tmp = str(tmp_path)
-    indir = os.path.join(tmp, "in")
-    _drop(indir, 4)
-    with open(os.path.join(indir, "msg_zz_bad.json"), "w") as f:
-        f.write("{not valid json!\n")
-
     dlq = os.path.join(tmp, "dlq")
     sink = CollectingSink()
-    pipe = SparkPipeline(
-        spark=spark,
-        source=FileStreamSource(indir),
-        sink=sink,
-        processor=lambda m: {**m, "ok": True},
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
+    pipe = _pipeline(
+        spark, tmp, sink, processor=lambda m: {**m, "ok": True},
+        source=_source(kind, os.path.join(tmp, "in"), 4,
+                       poison=b"{not valid json!"),
         dead_letter_dir=dlq,
     )
     pipe.process()
@@ -219,19 +242,24 @@ def test_dead_letter_quarantines_poison_and_batch_commits(spark, tmp_path):
     assert sorted(json.loads(bytes(r))["i"] for r in sink.rows) == [0, 1, 2, 3]
     quarantined = spark.read.parquet(dlq).collect()
     assert len(quarantined) == 1
-    assert b"not valid json" in bytes(quarantined[0]["value"])
+    assert bytes(quarantined[0]["value"]) == b"{not valid json!"
     assert "JSONDecodeError" in quarantined[0]["error"]
+    assert quarantined[0]["batch_id"] in {
+        b["batch_id"] for b in pipe.metrics.batches}
+    assert spark.read.parquet(dlq).dtypes == [
+        ("value", "binary"), ("error", "string"), ("batch_id", "int")]
     commits = os.listdir(os.path.join(tmp, "ckpt", "commits"))
     assert commits, "batch with quarantined poison must still commit"
     assert pipe.metrics.totals()["rows_dlq"] == 1
+    assert pipe.metrics.totals()["rows_out"] == 4
 
 
-def test_dead_letter_isolates_poison_in_bulk_processor(spark, tmp_path):
+@pytest.mark.parametrize("kind", SOURCES)
+def test_dead_letter_isolates_poison_in_bulk_processor(spark, tmp_path, kind):
     """Bulk path: the whole-batch call fails on the poison message, the
     pipeline falls back to per-message calls (singleton lists — same
     bulk contract), quarantining exactly the failing one."""
     tmp = str(tmp_path)
-    _drop(os.path.join(tmp, "in"), 4)
     dlq = os.path.join(tmp, "dlq")
 
     def bulk_proc(batch):
@@ -240,15 +268,9 @@ def test_dead_letter_isolates_poison_in_bulk_processor(spark, tmp_path):
         return [{"i": m["i"]} for m in batch]
 
     sink = CollectingSink()
-    SparkPipeline(
-        spark=spark,
-        source=FileStreamSource(os.path.join(tmp, "in")),
-        sink=sink,
-        processor=bulk_proc,
-        bulk=True,
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        dead_letter_dir=dlq,
-    ).process()
+    _pipeline(spark, tmp, sink, processor=bulk_proc, bulk=True,
+              source=_source(kind, os.path.join(tmp, "in"), 4),
+              dead_letter_dir=dlq).process()
 
     assert sorted(json.loads(bytes(r))["i"] for r in sink.rows) == [0, 1, 3]
     bad = spark.read.parquet(dlq).collect()
@@ -291,3 +313,72 @@ def test_column_processor_fast_path(spark, tmp_path):
     ).process()
     out = sorted((json.loads(bytes(r)) for r in sink.rows), key=lambda d: d["i"])
     assert [d["data_up"] for d in out] == ["SOMEDATA"] * 3
+
+
+@pytest.mark.parametrize("kind", SOURCES)
+def test_processor_runs_where_the_batch_lives(spark, tmp_path, capsys, kind):
+    """PubSubStreamSource batches are already on the driver: the
+    processor runs in the driver process and the micro-batch plan has
+    no MapInPandas node.  FileStreamSource batches run the processor
+    in a Python worker through mapInPandas."""
+    tmp = str(tmp_path)
+    sink = CollectingSink()
+    query = _pipeline(
+        spark, tmp, sink, processor=lambda m: {"i": m["i"], "pid": os.getpid()},
+        source=_source(kind, os.path.join(tmp, "in"), 3),
+    ).process()
+
+    out = [json.loads(bytes(r)) for r in sink.rows]
+    assert sorted(d["i"] for d in out) == [0, 1, 2]
+    on_driver = {d["pid"] == os.getpid() for d in out}
+    query.explain()
+    plan = capsys.readouterr().out
+    assert "Scan" in plan, plan
+    if kind == "pubsub":
+        assert on_driver == {True}
+        assert "MapInPandas" not in plan, plan
+    else:
+        assert on_driver == {False}
+        assert "MapInPandas" in plan, plan
+
+
+def test_metrics_are_scoped_to_their_own_query(spark, tmp_path):
+    """Two pipelines in one session keep separate totals: a continuous
+    pipeline's listener ignores another query's batches, and it
+    unregisters itself once its own query terminates."""
+    import time
+
+    tmp = str(tmp_path)
+    listeners = spark.streams._jsqm.listListeners
+    n_listeners = len(listeners())
+    first = SparkPipeline(
+        spark=spark,
+        source=_source("pubsub", os.path.join(tmp, "in1"), 3),
+        sink=CollectingSink(),
+        checkpoint_dir=os.path.join(tmp, "ckpt1"),
+    )
+    query = first.process(available_now=False)
+    try:
+        query.processAllAvailable()
+        second = SparkPipeline(
+            spark=spark,
+            source=_source("file", os.path.join(tmp, "in2"), 5),
+            sink=CollectingSink(),
+            checkpoint_dir=os.path.join(tmp, "ckpt2"),
+        )
+        second.process()
+        assert second.metrics.totals()["rows_in"] == 5
+        assert second.metrics.totals()["rows_out"] == 5
+        assert len(listeners()) == n_listeners + 1
+    finally:
+        query.stop()
+    deadline = time.time() + 10
+    while first.metrics.terminated is None and time.time() < deadline:
+        time.sleep(0.1)
+    assert first.metrics.terminated is not None
+    assert first.metrics.totals()["rows_in"] == 3, first.metrics.batches
+    assert first.metrics.totals()["rows_out"] == 3, first.metrics.batches
+    assert {b["query_id"] for b in first.metrics.batches} == {str(query.id)}
+    while len(listeners()) != n_listeners and time.time() < deadline:
+        time.sleep(0.1)
+    assert len(listeners()) == n_listeners

@@ -607,6 +607,40 @@ def test_mor_commit_log_records_delete_bytes_and_fields(spark, tmp_path):
         sink.read_snapshot(spark)
 
 
+def test_mor_drift_check_compares_column_names_as_a_set(spark, tmp_path):
+    """A commit written with its columns reordered reads correctly
+    (parquet and unionByName resolve by name); a commit with a dropped
+    or renamed column still raises."""
+    import json as _json
+    import os
+
+    from py_pubsub_pipeline_spark.pipeline import MorUpsertSink
+
+    base = str(tmp_path / "mor")
+    sink = MorUpsertSink(base, key="k", order=["ver"])
+    batch = spark.range(6).select(
+        F.col("id").alias("k"), F.lit(0).cast("long").alias("ver"),
+        (F.col("id") * 10).alias("val"))
+    sink(batch, 0)
+    sink(batch.where("k % 2 = 0").select(
+        (F.col("val") + 1).alias("val"), "k",
+        F.lit(1).cast("long").alias("ver")), 1)
+    assert sink._commits()[1]["fields"] == ["val", "k", "ver"]
+    got = sorted(tuple(r) for r in sink.read_snapshot(spark)
+                 .select("k", "ver", "val").collect())
+    assert got == [(k, 1, k * 10 + 1) if k % 2 == 0 else (k, 0, k * 10)
+                   for k in range(6)]
+
+    entry = os.path.join(base, "commits", "1.json")
+    with open(entry) as fh:
+        full = _json.load(fh)
+    for fields in (["val", "k"], ["value", "k", "ver"]):
+        with open(entry, "w") as fh:
+            _json.dump({**full, "fields": fields}, fh)
+        with pytest.raises(ValueError, match="schema drift"):
+            sink.read_snapshot(spark)
+
+
 def test_ivfpq_index_sink_compaction_read_identity_and_replay(
     spark, tmp_path
 ):
