@@ -25,7 +25,11 @@ Streaming:
                             only AFTER the batch sink returns — same
                             ordering as the reference's Acknowledger,
                             same at-least-once window (publish ok +
-                            commit lost => duplicates, exactly P:48-52)
+                            commit lost => duplicates, exactly P:48-52);
+                            DirectorySink writes a driver-path batch
+                            as one file from the driver, with no Spark
+                            job, as the reference publishes from the
+                            process that pulled (P:190-193)
 - graceful shutdown      -> SIGINT/SIGTERM -> query.stop() (P:15-24)
 - bounded run            -> trigger(availableNow=True) drains & stops
                             (P:132-166's max_processed_messages, but
@@ -44,6 +48,7 @@ import logging
 import os
 import signal
 import threading
+import uuid
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
@@ -113,18 +118,54 @@ class FileStreamSource:
 class DirectorySink:
     """Publish each result as a line in per-batch files under a
     directory 'topic'. Write happens inside foreachBatch, before the
-    engine commits offsets -> ack-after-publish ordering (P:82-84)."""
+    engine commits offsets -> ack-after-publish ordering (P:82-84).
+
+    The write path follows the frame.  A local frame
+    (``batch_df.isLocal()``: the one-partition frame SparkPipeline's
+    driver path hands over) is collected -- no Spark job on a
+    LocalTableScan -- and written by the driver as one
+    ``part-<epoch>-<uuid>.txt``: a dot-prefixed temporary name,
+    fsync, then ``os.replace``, so readers (which skip dot files)
+    only ever see a whole file.  No ``_SUCCESS`` marker is written,
+    and an empty frame writes nothing.  Any other frame (an
+    executor-path batch) keeps Spark's text write, which leaves
+    ``_SUCCESS``: a driver-side write would pull a large batch
+    through the driver.  Either way each line is the raw payload
+    plus ``\\n`` and each call appends files under fresh names, so
+    a replayed batch duplicates (the at-least-once window)."""
 
     def __init__(self, path: str):
         self.path = path
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isLocal():
+            self._write_local(batch_df, epoch_id)
+            return
         (
             batch_df.select(F.col("value").cast("string"))
             .write.mode("append")
             .format("text")
             .save(self.path)
         )
+
+    def _write_local(self, batch_df: DataFrame, epoch_id: int) -> None:
+        rows = batch_df.select(F.col("value").cast("binary")).collect()
+        if not rows:
+            return
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{epoch_id:05d}-{uuid.uuid4()}.txt"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        try:
+            with open(tmp, "wb") as fh:
+                # A null value is an empty line, as the text writer has it.
+                fh.writelines((r[0] or b"") + b"\n" for r in rows)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(tmp, os.path.join(self.path, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
 
 class IdempotentParquetSink:
@@ -865,9 +906,11 @@ class SparkPipeline:
         """foreachBatch function of the driver path.  The micro-batch
         is already on the driver as one partition, so it is pulled as
         Arrow and processed here by the shared batch function; the
-        sink gets a one-partition frame of the good rows.  No
-        Python-worker task runs in the trigger, and nothing re-runs the
-        processor, so no persist is needed."""
+        sink gets a one-partition local frame of the good rows
+        (``isLocal()`` is true), which DirectorySink writes from the
+        driver without a Spark job.  No Python-worker task runs in the
+        trigger, and nothing re-runs the processor, so no persist is
+        needed."""
         import pyarrow as pa
 
         run_batch = self._batch_fn()

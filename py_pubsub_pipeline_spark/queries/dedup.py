@@ -187,7 +187,7 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deliberately NOT widened (tables.widen_scan) — the r14 widen was
     re-adjudicated in r15 (VERDICT r14 item 1): two same-session
     interleaved A/B probes at sf0.1 driver conditions
-    (scripts/ab_ngram_widen.py) could not reproduce the r14 15-25%
+    (OPTIMIZATION_r15.md item 1) could not reproduce the r14 15-25%
     win — pooled mins capped 1.412 s (no widen) vs 1.616 s (widen),
     jaccard a wash (1.615 vs 1.540) — and the r14 driver's own run
     had the widened pair 2.5x slower.  Unlike the minhash kernels

@@ -7,11 +7,14 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
+from collections import Counter
 
 import pytest
 
 from py_pubsub_pipeline_spark.pipeline import (
     CollectingSink,
+    DirectorySink,
     FileStreamSource,
     IdempotentParquetSink,
     SparkPipeline,
@@ -382,3 +385,153 @@ def test_metrics_are_scoped_to_their_own_query(spark, tmp_path):
     while len(listeners()) != n_listeners and time.time() < deadline:
         time.sleep(0.1)
     assert len(listeners()) == n_listeners
+
+
+# ------------------------------------------------- DirectorySink write paths
+
+
+class _JobCountingSink:
+    """Calls ``inner`` under a job group of its own and records how
+    many Spark jobs each call started."""
+
+    _PROPS = ("spark.jobGroup.id", "spark.job.description",
+              "spark.job.interruptOnCancel")
+
+    def __init__(self, inner):
+        self.inner = inner
+        self.jobs: list[int] = []
+
+    def __call__(self, batch_df, epoch_id):
+        sc = batch_df.sparkSession.sparkContext
+        saved = {k: sc.getLocalProperty(k) for k in self._PROPS}
+        group = f"sink-{uuid.uuid4()}"
+        sc.setJobGroup(group, "sink call")
+        try:
+            self.inner(batch_df, epoch_id)
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        self.jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _out_files(out: str) -> list[str]:
+    return sorted(os.listdir(out)) if os.path.isdir(out) else []
+
+
+def _out_lines(out: str) -> Counter:
+    """Every line the sink published, as raw bytes, counted."""
+    lines: Counter = Counter()
+    for name in _out_files(out):
+        if not name.startswith((".", "_")):
+            with open(os.path.join(out, name), "rb") as fh:
+                lines.update(fh.read().splitlines())
+    return lines
+
+
+@pytest.mark.parametrize("kind", SOURCES)
+def test_directory_sink_runs_no_spark_job_for_a_driver_batch(
+    spark, tmp_path, kind
+):
+    """A driver-path batch reaches DirectorySink as a local frame and
+    is written by the driver: the sink call starts no Spark job.  An
+    executor-path batch still goes through Spark's text write."""
+    tmp = str(tmp_path)
+    sink = _JobCountingSink(DirectorySink(os.path.join(tmp, "out")))
+    _pipeline(spark, tmp, sink,
+              source=_source(kind, os.path.join(tmp, "in"), 3)).process()
+
+    assert sum(_out_lines(os.path.join(tmp, "out")).values()) == 3
+    assert sink.jobs, "the sink was never called"
+    if kind == "pubsub":
+        assert sink.jobs == [0] * len(sink.jobs)
+    else:
+        assert all(n >= 1 for n in sink.jobs), sink.jobs
+
+
+def test_directory_sink_one_part_file_per_driver_batch(spark, tmp_path):
+    """Each non-empty driver-path batch becomes one whole part file;
+    no dot-prefixed temporary file and no _SUCCESS marker are left."""
+    tmp = str(tmp_path)
+    out = os.path.join(tmp, "out")
+    _source("pubsub", os.path.join(tmp, "in"), 7)
+    pipe = _pipeline(spark, tmp, DirectorySink(out), source=PubSubStreamSource(
+        os.path.join(tmp, "in"), bulk_limit=3))
+    pipe.process()
+
+    non_empty = [b for b in pipe.metrics.batches if b["rows_out"]]
+    assert len(non_empty) == 3, pipe.metrics.batches
+    files = _out_files(out)
+    assert len(files) == 3 and all(
+        f.startswith("part-") and f.endswith(".txt") for f in files), files
+    assert sorted(json.loads(line)["i"] for line in _out_lines(out)) == list(
+        range(7))
+
+
+def test_directory_sink_driver_and_spark_writes_publish_the_same_lines(
+    spark, tmp_path
+):
+    """For the same payloads (one of them non-ASCII UTF-8), the
+    driver-side write and Spark's text write publish the same multiset
+    of lines; the Spark write still leaves _SUCCESS."""
+    tmp = str(tmp_path)
+    outs = {}
+    for kind in SOURCES:
+        base = os.path.join(tmp, kind)
+        out = os.path.join(base, "out")
+        _pipeline(
+            spark, base, DirectorySink(out),
+            processor=lambda m: {**m, "name": "Zoë ✓"},
+            result_serializer=lambda r: json.dumps(
+                r, ensure_ascii=False).encode("utf-8"),
+            source=_source(kind, os.path.join(base, "in"), 4),
+        ).process()
+        outs[kind] = out
+
+    lines = _out_lines(outs["pubsub"])
+    assert sum(lines.values()) == 4
+    assert all("Zoë ✓".encode() in line for line in lines)
+    assert lines == _out_lines(outs["file"])
+    assert "_SUCCESS" in _out_files(outs["file"])
+    assert "_SUCCESS" not in _out_files(outs["pubsub"])
+
+
+def test_directory_sink_all_dead_lettered_batch_writes_nothing(
+    spark, tmp_path
+):
+    """A driver-path batch whose every message is quarantined hands the
+    sink an empty frame: no part file is written and the batch still
+    commits."""
+    tmp = str(tmp_path)
+    topic = os.path.join(tmp, "in")
+    for _ in range(2):
+        publish(topic, b"{not valid json!")
+    out, dlq = os.path.join(tmp, "out"), os.path.join(tmp, "dlq")
+    pipe = _pipeline(spark, tmp, DirectorySink(out),
+                     source=PubSubStreamSource(topic), dead_letter_dir=dlq)
+    pipe.process()
+
+    assert _out_files(out) == []
+    assert spark.read.parquet(dlq).count() == 2
+    assert os.listdir(os.path.join(tmp, "ckpt", "commits"))
+    assert pipe.metrics.totals()["rows_out"] == 0
+
+
+def test_directory_sink_failed_local_write_is_not_committed(spark, tmp_path):
+    """If the driver-side write fails (the sink path is a regular
+    file), the batch is not committed and is redelivered whole on the
+    next run."""
+    tmp = str(tmp_path)
+    out = os.path.join(tmp, "out")
+    with open(out, "w") as fh:
+        fh.write("not a directory")
+    source = _source("pubsub", os.path.join(tmp, "in"), 3)
+
+    with pytest.raises(Exception, match="File exists"):
+        _pipeline(spark, tmp, DirectorySink(out), source=source).process()
+    commits = os.path.join(tmp, "ckpt", "commits")
+    assert not os.path.exists(commits) or not os.listdir(commits)
+
+    os.remove(out)
+    _pipeline(spark, tmp, DirectorySink(out), source=source).process()
+    assert sorted(json.loads(line)["i"] for line in _out_lines(out)) == [
+        0, 1, 2]

@@ -335,7 +335,7 @@ def test_formats_fixture_schemas_match_inferred(spark):
         "scan_partition_pruned", "scan_partition_overwrite",
         "scan_manifest_snapshot", "join_dpp_partition_pruned",
         "scan_partition_evolution", "scan_equality_deletes",
-        "scan_minmax_skipping",
+        "scan_minmax_skipping", "scan_time_travel",
     ):
         reg.get(key).fn(spark, SF_SMALL).count()
 
@@ -363,6 +363,14 @@ def test_formats_fixture_schemas_match_inferred(spark):
          FM._DELETE_KEYS_DDL),
         ("range file", os.path.join(
             FM._cache_dir(SF_SMALL, "range_files"), "range-0"),
+         FM._ORDERS_DDL),
+        # file-2 is the late file only time-travel snapshot 2 lists;
+        # file-1 is a hash-layout file of the zone-map stats.
+        ("time-travel file", os.path.join(
+            FM._cache_dir(SF_SMALL, "manifest_snap"), "file-2"),
+         FM._ORDERS_DDL),
+        ("hash-zone file", os.path.join(
+            FM._manifest_fixture(spark, SF_SMALL), "file-1"),
          FM._ORDERS_DDL),
         ("spec-1 leaf", leaf(by_status, "o_orderstatus="),
          FM._ORDERS_LEAF_SPEC1_DDL),
