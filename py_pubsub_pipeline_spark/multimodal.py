@@ -28,7 +28,6 @@ import struct
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Schema contract for a multimodal asset row.
 ASSET_SCHEMA = (
@@ -43,22 +42,6 @@ DECODED_SCHEMA = (
 
 # Deterministic synthetic dimensions (mirrored by the SQL oracle).
 W_MOD, H_MOD = 13, 7
-
-
-def documents_as_assets(docs: DataFrame) -> DataFrame:
-    """Wrap the documents table as binary assets (text bytes as the
-    opaque payload — the schema and plumbing production reuses)."""
-    payload = F.col("text").cast("binary")
-    return docs.select(
-        F.col("doc_id").alias("asset_id"),
-        payload.alias("payload"),
-        F.lit("text/plain").alias("media_type"),
-        F.struct(
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.length(payload).cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    )
 
 
 # ------------------------------------------------------------ encoders

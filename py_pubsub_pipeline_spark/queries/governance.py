@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import table
+from .graph import COPURCHASE_MINW, _copurchase_edges
 from .rag import _SQL_COS, _cos_micro, _probe_pool
 
 _SQL_COS_MICRO = "FLOOR((" + _SQL_COS + ") * 1e6 + 0.5)"
@@ -613,7 +614,6 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- neighbor-Jaccard link prediction ---------------------------------------
 JLP_TOPK = 20
-JLP_MINW = 2  # co-purchase weight floor (the graph family's edge rule)
 
 
 @query(
@@ -626,7 +626,7 @@ JLP_MINW = 2  # co-purchase weight floor (the graph family's edge rule)
         SELECT a.p AS u, b.p AS v, COUNT(*) AS w
         FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
         GROUP BY 1, 2)
-      WHERE w >= {JLP_MINW}
+      WHERE w >= {COPURCHASE_MINW}
     ), deg AS MATERIALIZED (
       SELECT u AS z, COUNT(*) AS d FROM e GROUP BY u
     ), wedge AS (
@@ -664,18 +664,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast against both endpoints, TakeOrdered for the top-k.
     The score is EXACT INTEGER milli-Jaccard (n*1000 DIV union) —
     no DECIMAL quantization needed at all, unlike AA's 1/ln terms."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= JLP_MINW)
-        .select("u", "v")
-    )
+    e = _copurchase_edges(spark, sf_dir)
     deg = e.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed(
         "u", "z")
     e1 = e.select(F.col("u"), F.col("v").alias("z"))

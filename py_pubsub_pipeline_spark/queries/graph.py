@@ -30,6 +30,15 @@ Scale notes:
 Mirrors the reference's enrichment-loop role (pubsub_pipeline.py:149
 `while True` driver loop controlling distributed work per iteration)
 in spirit: driver coordinates, executors compute.
+
+Graph builders: each graph has one builder.  The part co-purchase
+graph (`_copurchase_edges`, weight floor COPURCHASE_MINW) serves
+kcore, adamic_adar, modularity, clustering, assortativity, bfs and
+governance.graph_jaccard_linkpred; ml_item_cf takes pagerank's
+`_purchase_pairs`; dedup_cc and split_leakage_safe share
+`_components_with_singletons`.  Edge builders never checkpoint: each
+key's eager/lazy checkpoint was measured per key and stays at its
+call site.
 """
 
 from __future__ import annotations
@@ -189,6 +198,28 @@ def connected_components_star(
     return labels.unionByName(singles)
 
 
+def _components_with_singletons(docs: DataFrame,
+                                pairs: DataFrame) -> DataFrame:
+    """(doc_id, component) for every row of `docs` (doc_id): min-label
+    components of the undirected graph given as (a_id, b_id) pairs.
+    Only vertices that HAVE edges iterate (the near-dup graph is a
+    sliver of the corpus); the untouched majority joins in as
+    their-own-component rows at the end — no per-round work for them.
+    The symmetrized edge list is checkpointed here (eager); any
+    checkpoint of the returned components is the caller's."""
+    edges = pairs.select(
+        F.col("a_id").alias("u"), F.col("b_id").alias("v")
+    ).unionByName(
+        pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
+    ).localCheckpoint(eager=True, storageLevel=_DISK)
+    touched = edges.select(F.col("u").alias("doc_id")).distinct()
+    labels = connected_components(touched, edges)
+    singletons = docs.join(touched, "doc_id", "left_anti").select(
+        "doc_id", F.col("doc_id").alias("component")
+    )
+    return labels.unionByName(singletons)
+
+
 @query(
     "dedup_cc",
     oracle=f"""
@@ -225,20 +256,7 @@ def dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked despite being non-single-query semantics."""
     docs = table(spark, sf_dir, "documents").select("doc_id")
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("a_id", "b_id")
-    edges = pairs.select(
-        F.col("a_id").alias("u"), F.col("b_id").alias("v")
-    ).unionByName(
-        pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
-    ).localCheckpoint(eager=True, storageLevel=_DISK)
-    # Iterate only over vertices that HAVE edges (the near-dup graph is
-    # a sliver of the corpus); the untouched majority joins in as
-    # their-own-component rows at the end — no per-round work for them.
-    touched = edges.select(F.col("u").alias("doc_id")).distinct()
-    labels = connected_components(touched, edges)
-    singletons = docs.join(touched, "doc_id", "left_anti").select(
-        "doc_id", F.col("doc_id").alias("component")
-    )
-    return labels.unionByName(singletons)
+    return _components_with_singletons(docs, pairs)
 
 
 @query(
@@ -403,9 +421,30 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_customers"))
 
 
+COPURCHASE_MINW = 2  # co-purchase weight floor: the part graph's edge rule
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v): the part co-purchase graph — two parts co-ordered in
+    >= COPURCHASE_MINW orders, symmetric (one row per direction).  The
+    same support filter as agg_market_basket's co-occurrence
+    denoising."""
+    li = table(spark, sf_dir, "lineitem")
+    items = li.select(F.col("l_orderkey").alias("ok"),
+                      F.col("l_partkey").alias("p")).distinct()
+    a = items.select("ok", F.col("p").alias("u"))
+    b = items.select("ok", F.col("p").alias("v"))
+    return (
+        a.join(b, "ok")
+        .filter(F.col("u") != F.col("v"))
+        .groupBy("u", "v").agg(F.count("*").alias("w"))
+        .filter(F.col("w") >= COPURCHASE_MINW)
+        .select("u", "v")
+    )
+
+
 _KCORE_K = 3
 _KCORE_ROUNDS = 4
-_KCORE_MINW = 2
 
 
 def _kcore_oracle() -> str:
@@ -441,7 +480,7 @@ def _kcore_oracle() -> str:
         SELECT a.p AS u, b.p AS v, COUNT(*) AS w
         FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
         GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
+      WHERE w >= {COPURCHASE_MINW}
     ),{",".join(rounds)}
 {traj}
     """
@@ -450,7 +489,7 @@ def _kcore_oracle() -> str:
 @query("graph_kcore_peel", oracle=_kcore_oracle())
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peeling (k={_KCORE_K}) on the part co-purchase graph
-    (edge = two parts co-ordered >= {_KCORE_MINW} times, symmetric):
+    (edge = two parts co-ordered >= {COPURCHASE_MINW} times, symmetric):
     each round drops every vertex with degree < k and the edges it
     carried, for {_KCORE_ROUNDS} bounded rounds — the dense-subgraph
     extractor (community cores, spam-cluster mining) and the third
@@ -464,21 +503,10 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint) so the plan doesn't nest exponentially — the
     same move as graph_pagerank. Full degeneracy ordering would run
     rounds to fixpoint (O(peel depth)); the bounded form is what a
-    production job schedules. The w >= {_KCORE_MINW} support filter is
-    the same co-occurrence denoising as agg_market_basket's."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW)
-        .select("u", "v")
-        .localCheckpoint(eager=False, storageLevel=_DISK)
-    )
+    production job schedules. The w >= {COPURCHASE_MINW} support
+    filter is the same co-occurrence denoising as agg_market_basket's."""
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     traj = []
     for r in range(1, _KCORE_ROUNDS + 1):
         keep = (
@@ -521,7 +549,7 @@ _AA_TOPK = 20
         SELECT a.p AS u, b.p AS v, COUNT(*) AS w
         FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
         GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
+      WHERE w >= {COPURCHASE_MINW}
     ), deg AS MATERIALIZED (
       SELECT u AS z, COUNT(*) AS d FROM e GROUP BY u
     ), wedge AS (
@@ -562,24 +590,13 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     removes existing edges, per-pair agg sums DECIMAL-quantized
     1/ln(deg) terms (shared z always has degree >= 2, so ln > 0),
     TakeOrdered for the top-k. Ordering ties break on (u, v)."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW)
-        .select("u", "v")
-        # NOT checkpointed despite five consumers: the AQE-final plan
-        # already serves every consumer from ReusedExchange over the
-        # items self-join + weight agg (verified in
-        # plans/r14/graph_adamic_adar_before.txt), so a DISK
-        # materialization only adds a write+read — measured 2.3 -> 3.3 s
-        # at sf0.1 (paired A/B, both orders) and reverted.
-    )
+    # NOT checkpointed despite five consumers: the AQE-final plan
+    # already serves every consumer from ReusedExchange over the
+    # items self-join + weight agg (verified in
+    # plans/r14/graph_adamic_adar_before.txt), so a DISK
+    # materialization only adds a write+read — measured 2.3 -> 3.3 s
+    # at sf0.1 (paired A/B, both orders) and reverted.
+    e = _copurchase_edges(spark, sf_dir)
     deg = e.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed(
         "u", "z")
     e1 = e.select(F.col("u"), F.col("v").alias("z"))
@@ -614,7 +631,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a.p AS u, b.p AS v, COUNT(*) AS w
         FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
         GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
+      WHERE w >= {COPURCHASE_MINW}
     ), lab AS (
       SELECT p_partkey AS p, p_brand AS c FROM part
     ), el AS MATERIALIZED (
@@ -650,17 +667,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     both within-edge counts and degree sums; Q's per-community terms
     quantize through DECIMAL(18,12) before the final sum. Everything
     past the edge build is community-cardinality-sized."""
-    li = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok").filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW).select("u", "v")
-    )
+    e = _copurchase_edges(spark, sf_dir)
     lab = p.select(F.col("p_partkey").alias("pk"), F.col("p_brand").alias("c"))
     el = (
         e.join(F.broadcast(lab.withColumnRenamed("pk", "u")
@@ -698,7 +706,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a.p AS u, b.p AS v, COUNT(*) AS w
         FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
         GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
+      WHERE w >= {COPURCHASE_MINW}
     ), deg AS MATERIALIZED (
       SELECT u, COUNT(*) AS d FROM e GROUP BY u
     ), tri AS (
@@ -738,17 +746,8 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup join; per-node ratios quantize through DECIMAL before the
     averages. The symmetric edge list makes adjacency a direct
     equi-join, no direction cases."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok").filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW).select("u", "v")
-        .localCheckpoint(eager=False, storageLevel=_DISK)
-    )
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     deg = e.groupBy("u").agg(F.count("*").alias("d"))
     e1 = e.select(F.col("v").alias("z"), F.col("u").alias("wu"))
     e2 = e.select(F.col("u").alias("z"), F.col("v").alias("wv"))
@@ -785,7 +784,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a.p AS u, b.p AS v, COUNT(*) AS w
         FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
         GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
+      WHERE w >= {COPURCHASE_MINW}
     ), deg AS (
       SELECT u, CAST(COUNT(*) AS DOUBLE) AS d FROM e GROUP BY u
     ), ed AS (
@@ -820,19 +819,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex-keyed hash joins), one co-moment aggregate with
     DECIMAL-quantized sums — the symmetric edge list makes the
     Newman edge-correlation exactly this Pearson."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok").filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW).select("u", "v")
-        # not checkpointed: consumers share the self-join exchange via
-        # ReusedExchange (see graph_adamic_adar note; checkpoint
-        # measured slower at sf0.1 and reverted)
-    )
+    # not checkpointed: consumers share the self-join exchange via
+    # ReusedExchange (see graph_adamic_adar note; checkpoint
+    # measured slower at sf0.1 and reverted)
+    e = _copurchase_edges(spark, sf_dir)
     deg = e.groupBy("u").agg(F.count("*").cast("double").alias("d"))
     ed = (
         e.join(deg.withColumnRenamed("u", "ju")
@@ -908,18 +898,15 @@ def ml_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a user with 10^5 items contributes nothing to item similarity
     but 10^10 pairs — the dedup_ngram_capped df-cap argument,
     user-side); degrees broadcast back as an item-bounded dim."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    cs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-        # not checkpointed: the degree dim and both self-join sides
-        # share the distinct's exchange via ReusedExchange (see
-        # graph_adamic_adar note; checkpoint measured slower at sf0.1
-        # and reverted)
-    )
+    # Imported here, not at module top: graph is loaded before
+    # pagerank, and a top-level import would register pagerank's keys
+    # ahead of this module's and reorder the registry.
+    from .pagerank import _purchase_pairs
+
+    # not checkpointed: the degree dim and both self-join sides share
+    # the distinct's exchange via ReusedExchange (see graph_adamic_adar
+    # note; checkpoint measured slower at sf0.1 and reverted)
+    cs = _purchase_pairs(spark, sf_dir)
     deg = cs.groupBy("supp").agg(F.count("*").alias("n"))
     a, b = cs.alias("a"), cs.alias("b")
     cooc = (
@@ -979,7 +966,7 @@ def _bfs_oracle() -> str:
         SELECT a.p AS u, b.p AS v, COUNT(*) AS w
         FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
         GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
+      WHERE w >= {COPURCHASE_MINW}
     ), verts AS MATERIALIZED (
       SELECT DISTINCT u FROM e
     ), d0 AS MATERIALIZED (
@@ -1014,19 +1001,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor storage stay flat in iteration count.  The bounded round
     count is the production posture (distance saturates at the
     diameter of interest); the histogram output is schema-bounded."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW)
-        .select("u", "v")
-        .localCheckpoint(eager=True, storageLevel=_DISK)
-    )
+    e = _copurchase_edges(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=_DISK)
     verts = e.select("u").distinct()
     # LAZY round checkpoints (r15): the round count is FIXED — no
     # driver decision reads a round's result — so materialization can
@@ -1167,27 +1143,16 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-split audit (the previous shape called dedup_cc() AND
     # dedup_ngram_jaccard() separately — two full runs of the shingle
     # self-join pipeline), and one materialization of the component
-    # table (asg is referenced four times downstream).  Identical
-    # computation to dedup_cc(spark, sf_dir): same pairs, same edge
-    # symmetrization, same min-label fixpoint, same singleton union.
+    # table (asg is referenced four times downstream).  The components
+    # are dedup_cc's own assembly over that pair relation.
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    pairs_ckpt = (
+    pairs = (
         dedup_ngram_jaccard(spark, sf_dir)
         .select("a_id", "b_id")
         .localCheckpoint(eager=False, storageLevel=_DISK)
     )
-    cc_edges = pairs_ckpt.select(
-        F.col("a_id").alias("u"), F.col("b_id").alias("v")
-    ).unionByName(
-        pairs_ckpt.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
-    ).localCheckpoint(eager=True, storageLevel=_DISK)
-    touched = cc_edges.select(F.col("u").alias("doc_id")).distinct()
-    cc_labels = connected_components(touched, cc_edges)
-    comp = cc_labels.unionByName(
-        docs.join(touched, "doc_id", "left_anti").select(
-            "doc_id", F.col("doc_id").alias("component")
-        )
-    ).localCheckpoint(eager=False, storageLevel=_DISK)
+    comp = _components_with_singletons(docs, pairs).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     asg = comp.withColumn(
         "split",
         F.when(
@@ -1197,7 +1162,6 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit("test")),
     )
     csize = asg.groupBy("component").agg(F.count("*").alias("cn"))
-    pairs = pairs_ckpt
     xp = (
         pairs.join(
             asg.select(F.col("doc_id").alias("a_id"),

@@ -24,6 +24,13 @@ damping update 0.15 + 0.85 * (sum::double / 1e12) is again plain
 double ops, so every iteration's rank vector is bit-identical across
 engines, and iteration N is too.
 
+Graph builders: every key here (and graph.ml_item_cf) takes its
+graph from one builder — `_purchase_pairs` (directed cust→supp),
+`_purchase_edges` (symmetrized, suppliers offset by SUPP_OFFSET) or
+`_purchase_verts` (customer ∪ supplier) — and pagerank/PPR share one
+`_rank_round`.  Builders never checkpoint: each key's eager/lazy
+checkpoint was measured per key and stays at its call site.
+
 Scale notes:
 - Per round: one join edges⋈ranks on the source key + one hash agg on
   the destination key — the canonical two-shuffle PageRank profile.
@@ -51,7 +58,7 @@ Mirrors the reference's driver-coordinates/executors-compute loop
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.ckpt import DISK as _DISK
@@ -62,6 +69,82 @@ N_ITER = 6
 DAMPING = 0.85
 TELEPORT = 0.15
 SUPP_OFFSET = 10_000_000  # supplier ids live above customer ids
+
+
+def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cust, supp): the distinct 'customer bought from supplier' pairs
+    of orders⋈lineitem — the directed bipartite purchase graph."""
+    o = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
+    return (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .select(F.col("o_custkey").alias("cust"),
+                F.col("l_suppkey").alias("supp"))
+        .distinct()
+    )
+
+
+def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v): the purchase graph symmetrized (u→v and v→u) in one id
+    space, supplier ids offset by SUPP_OFFSET."""
+    eb = _purchase_pairs(spark, sf_dir)
+    return eb.select(
+        F.col("cust").alias("u"),
+        (F.col("supp") + SUPP_OFFSET).alias("v"),
+    ).unionByName(
+        eb.select(
+            (F.col("supp") + SUPP_OFFSET).alias("u"),
+            F.col("cust").alias("v"),
+        )
+    )
+
+
+def _purchase_verts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node): every customer and every (offset) supplier, including
+    the ones without a purchase edge."""
+    return (
+        table(spark, sf_dir, "customer")
+        .select(F.col("c_custkey").alias("node"))
+        .unionByName(
+            table(spark, sf_dir, "supplier").select(
+                (F.col("s_suppkey") + SUPP_OFFSET).alias("node")
+            )
+        )
+        .distinct()
+    )
+
+
+def _rank_round(ed: DataFrame, ranks: DataFrame, verts: DataFrame,
+                teleport: Column, carry: tuple[str, ...] = ()) -> DataFrame:
+    """One synchronous PageRank round: every edge of `ed` (u, v, outdeg)
+    carries its source's pr / outdeg snapped to 1e12 fixed point, each
+    vertex sums its in-contributions in DECIMAL(28,0), and
+    pr = teleport + DAMPING * sum.  Every row of `verts` gets a rank;
+    its `carry` columns ride along.  The caller checkpoints."""
+    sums = (
+        ed.join(ranks, ed.u == ranks.node)
+        .select(
+            F.col("v"),
+            F.floor(
+                (F.col("pr") / F.col("outdeg")) * F.lit(1e12) + F.lit(0.5)
+            )
+            .cast("decimal(28,0)")
+            .alias("c"),
+        )
+        .groupBy("v")
+        .agg(F.sum("c").alias("s"))
+    )
+    return verts.join(sums, verts.node == sums.v, "left").select(
+        "node", *carry,
+        (
+            teleport
+            + F.lit(DAMPING)
+            * (
+                F.coalesce(F.col("s").cast("double"), F.lit(0.0))
+                / F.lit(1e12)
+            )
+        ).alias("pr"),
+    )
 
 
 def _oracle_sql() -> str:
@@ -165,40 +248,16 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_pagerank — without it the plan doubles per round).
     Determinism: the vote multiset and tie-break are engine-
     independent, so the oracle replays the exact label sequence."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
     # LAZY checkpoints throughout (r15): LPA's round count is FIXED —
     # no driver decision reads a round's result — so materialization
     # folds into the final action instead of one job barrier per round
     # (lineage truncation is plan-level and identical either way).
     # Force-lazy interleaved A/B at sf0.1: every lazy run beat every
     # eager run (5.13-5.33 s vs 5.94-6.47), identical rows.
-    edges = eb.select(
-        F.col("cust").alias("u"),
-        (F.col("supp") + SUPP_OFFSET).alias("v"),
-    ).unionByName(
-        eb.select(
-            (F.col("supp") + SUPP_OFFSET).alias("u"),
-            F.col("cust").alias("v"),
-        )
-    ).localCheckpoint(eager=False, storageLevel=_DISK)
-    verts = (
-        table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("node"))
-        .unionByName(
-            table(spark, sf_dir, "supplier").select(
-                (F.col("s_suppkey") + SUPP_OFFSET).alias("node")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=False, storageLevel=_DISK)
-    )
+    edges = _purchase_edges(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
+    verts = _purchase_verts(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     lbl = verts.select("node", F.col("node").alias("lbl"))
     # Top-1 stays a row_number window: the max(struct(c, -lbl)) hash-
     # agg form was tried (r14 optimization round) and measured a small
@@ -233,22 +292,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier', via orders⋈lineitem). Returns (node, pr) for every
     customer and supplier; supplier ids are offset by 10M into a
     disjoint id space."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    edges = eb.select(
-        F.col("cust").alias("u"),
-        (F.col("supp") + SUPP_OFFSET).alias("v"),
-    ).unionByName(
-        eb.select(
-            (F.col("supp") + SUPP_OFFSET).alias("u"),
-            F.col("cust").alias("v"),
-        )
-    )
+    edges = _purchase_edges(spark, sf_dir)
     deg = edges.groupBy("u").agg(F.count("*").cast("double").alias("outdeg"))
     # Edge list with out-degree attached, laid out by source key once;
     # every iteration's join reuses this partitioning (only ranks move).
@@ -259,47 +303,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.join(deg, "u")
         .localCheckpoint(eager=True, storageLevel=_DISK)
     )
-    verts = (
-        table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("node"))
-        .unionByName(
-            table(spark, sf_dir, "supplier").select(
-                (F.col("s_suppkey") + SUPP_OFFSET).alias("node")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=_DISK)
-    )
+    verts = _purchase_verts(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=_DISK)
     ranks = verts.select("node", F.lit(1.0).cast("double").alias("pr"))
     for _ in range(N_ITER):
-        sums = (
-            ed.join(ranks, ed.u == ranks.node)
-            .select(
-                F.col("v"),
-                F.floor(
-                    (F.col("pr") / F.col("outdeg")) * F.lit(1e12) + F.lit(0.5)
-                )
-                .cast("decimal(28,0)")
-                .alias("c"),
-            )
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            verts.join(sums, verts.node == sums.v, "left")
-            .select(
-                "node",
-                (
-                    F.lit(TELEPORT)
-                    + F.lit(DAMPING)
-                    * (
-                        F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                        / F.lit(1e12)
-                    )
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=True, storageLevel=_DISK)
-        )
+        ranks = _rank_round(ed, ranks, verts, F.lit(TELEPORT)).localCheckpoint(
+            eager=True, storageLevel=_DISK)
     return ranks
 
 
@@ -372,8 +381,6 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     same two-shuffle profile as PageRank; the edge list repartitions
     on its join key once and localCheckpoint truncates lineage per
     round. Scores move as (id, double) pairs, never adjacency."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
     # LAZY checkpoints throughout (r15): HITS runs a FIXED round count
     # — no driver decision reads a round's result — so materialization
     # folds into the final action instead of one job barrier per
@@ -384,13 +391,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged: ar/hr feed both a projection and the broadcast-MAX
     # subquery, so they stay checkpointed (one materialization serves
     # both); laziness only moves WHEN the blocks land.
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-        .localCheckpoint(eager=False, storageLevel=_DISK)
-    )
+    eb = _purchase_pairs(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     snap = lambda c: F.floor(c * 1e12 + 0.5).cast("decimal(28,0)")  # noqa: E731
     h = eb.select("cust").distinct().select(
         F.col("cust").alias("node"), F.lit(1.0).alias("sc")
@@ -497,20 +499,8 @@ def graph_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per step one edge join + one destination-keyed agg on the
     repartitioned/localCheckpointed edge list — the PageRank
     two-shuffle profile; walk terms move as (id, double) pairs."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    edges = eb.select(
-        F.col("cust").alias("u"), (F.col("supp") + SUPP_OFFSET).alias("v")
-    ).unionByName(
-        eb.select((F.col("supp") + SUPP_OFFSET).alias("u"),
-                  F.col("cust").alias("v"))
-    ).localCheckpoint(eager=True, storageLevel=_DISK)
+    edges = _purchase_edges(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=_DISK)
     verts = edges.select(F.col("u").alias("node")).distinct() \
         .localCheckpoint(eager=True, storageLevel=_DISK)
     snap = lambda c: F.floor(c * 1e12 + 0.5).cast("decimal(28,0)")  # noqa: E731
@@ -612,23 +602,7 @@ def graph_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentrated near seeds, so the rank table a real run carries can
     additionally be thresholded — documented, not applied, since the
     oracle replays the dense form."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    edges = eb.select(
-        F.col("cust").alias("u"),
-        (F.col("supp") + SUPP_OFFSET).alias("v"),
-    ).unionByName(
-        eb.select(
-            (F.col("supp") + SUPP_OFFSET).alias("u"),
-            F.col("cust").alias("v"),
-        )
-    )
+    edges = _purchase_edges(spark, sf_dir)
     deg = edges.groupBy("u").agg(F.count("*").cast("double").alias("outdeg"))
     # no repartition("u"): dead shuffle, see the module header
     ed = (
@@ -636,14 +610,7 @@ def graph_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True, storageLevel=_DISK)
     )
     sv = (
-        table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("node"))
-        .unionByName(
-            table(spark, sf_dir, "supplier").select(
-                (F.col("s_suppkey") + SUPP_OFFSET).alias("node")
-            )
-        )
-        .distinct()
+        _purchase_verts(spark, sf_dir)
         .select(
             "node",
             F.when(F.col("node") % PPR_SEED_MOD == 0, F.lit(1.0))
@@ -653,34 +620,9 @@ def graph_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranks = sv.select("node", "s0", F.col("s0").alias("pr"))
     for _ in range(PPR_ITER):
-        sums = (
-            ed.join(ranks, ed.u == ranks.node)
-            .select(
-                F.col("v"),
-                F.floor(
-                    (F.col("pr") / F.col("outdeg")) * F.lit(1e12) + F.lit(0.5)
-                )
-                .cast("decimal(28,0)")
-                .alias("c"),
-            )
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            sv.join(sums, sv.node == sums.v, "left")
-            .select(
-                "node", "s0",
-                (
-                    F.lit(TELEPORT) * F.col("s0")
-                    + F.lit(DAMPING)
-                    * (
-                        F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                        / F.lit(1e12)
-                    )
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=True, storageLevel=_DISK)
-        )
+        ranks = _rank_round(
+            ed, ranks, sv, F.lit(TELEPORT) * F.col("s0"), carry=("s0",)
+        ).localCheckpoint(eager=True, storageLevel=_DISK)
     return ranks.select(
         "node", F.col("s0").cast("long").alias("is_seed"), "pr"
     )

@@ -50,10 +50,6 @@ def _dot(a: str, b: str) -> Column:
     )
 
 
-def _cosine(a: str = "ea", b: str = "eb") -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 def _norm2(col: str) -> Column:
     """Self inner product — precomputed per vector BEFORE any pair
     join, so each pair evaluates one 64-element fold (the dot), not

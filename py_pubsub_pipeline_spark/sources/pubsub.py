@@ -61,11 +61,16 @@ def _msg_name(seq: int) -> str:
     return f"{seq:0{_SEQ_WIDTH}d}.msg"
 
 
-def _next_seq(topic_dir: str) -> int:
-    existing = [
-        int(f[:_SEQ_WIDTH]) for f in os.listdir(topic_dir) if f.endswith(".msg")
-    ]
-    return max(existing, default=-1) + 1
+def _end_seq(topic_dir: str) -> int:
+    """One past the highest published seq: the next free seq to try,
+    and the exclusive end of the readable range.  One directory
+    listing; 0 when the topic directory does not exist."""
+    try:
+        names = os.listdir(topic_dir)
+    except (FileNotFoundError, NotADirectoryError):
+        return 0
+    seqs = [int(f[:_SEQ_WIDTH]) for f in names if f.endswith(".msg")]
+    return max(seqs, default=-1) + 1
 
 
 def _claim_seq(topic_dir: str, staged_path: str, seq_hint: int) -> int:
@@ -98,7 +103,7 @@ def publish(topic_dir: str, payload: bytes) -> int:
     tmp = os.path.join(topic_dir, f".tmp-{uuid.uuid4().hex}")
     with open(tmp, "wb") as f:
         f.write(payload)
-    return _claim_seq(topic_dir, tmp, _next_seq(topic_dir))
+    return _claim_seq(topic_dir, tmp, _end_seq(topic_dir))
 
 
 def _read_range(topic_dir: str, start: int, end: int) -> Iterator[tuple]:
@@ -140,18 +145,11 @@ class PubSubDirStreamReader(SimpleDataSourceStreamReader):
         return {"seq": 0}
 
     def _latest_seq(self) -> int:
-        if not os.path.isdir(self.topic_dir):
-            return 0
         marker = os.path.join(self.topic_dir, FAULT_MARKER)
         if os.path.exists(marker):
             os.remove(marker)  # one-shot: consumed on first poll
             raise IOError("injected broker fault (test client marker)")
-        seqs = [
-            int(f[:_SEQ_WIDTH])
-            for f in os.listdir(self.topic_dir)
-            if f.endswith(".msg")
-        ]
-        return max(seqs, default=-1) + 1
+        return _end_seq(self.topic_dir)
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         import time
@@ -199,7 +197,7 @@ class PubSubDirStreamWriter(DataSourceStreamWriter):
         # Publish-before-ack: this runs before Spark writes the batch
         # commit to the checkpoint (R10 ordering).
         os.makedirs(self.topic_dir, exist_ok=True)
-        seq = _next_seq(self.topic_dir)
+        seq = _end_seq(self.topic_dir)
         for m in messages:
             for path in m.files:
                 # Atomic claim: never overwrites a concurrent external
@@ -229,15 +227,7 @@ class PubSubDirBatchReader(DataSourceReader):
         self.topic_dir = options["path"]
         self.start = int(options.get("start_offset", 0))
         end = options.get("end_offset")
-        if end is not None:
-            self.end = int(end)
-        else:
-            seqs = [
-                int(f[:_SEQ_WIDTH])
-                for f in os.listdir(self.topic_dir)
-                if f.endswith(".msg")
-            ] if os.path.isdir(self.topic_dir) else []
-            self.end = max(seqs, default=-1) + 1
+        self.end = int(end) if end is not None else _end_seq(self.topic_dir)
 
     def partitions(self):  # noqa: ANN201
         from pyspark.sql.datasource import InputPartition

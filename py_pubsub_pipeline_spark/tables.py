@@ -100,9 +100,3 @@ def widen_scan(df: DataFrame, *keys: str) -> DataFrame:
 def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load the full corpus as a dict of DataFrames."""
     return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() surfaces."""
-    for name in TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

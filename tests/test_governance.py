@@ -220,7 +220,7 @@ def test_jaccard_linkpred_matches_bruteforce(spark):
                     wcount[(u, v)] = wcount.get((u, v), 0) + 1
     adj: dict[int, set] = {}
     for (u, v), w in wcount.items():
-        if w >= gov.JLP_MINW:
+        if w >= gov.COPURCHASE_MINW:
             adj.setdefault(u, set()).add(v)
     scored = []
     seen = set()

@@ -8,14 +8,18 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import pytest
 
 from py_pubsub_pipeline_spark.pipeline import CollectingSink, SparkPipeline
 from py_pubsub_pipeline_spark.sources.pubsub import (
     FAULT_MARKER,
+    PubSubDirBatchReader,
     PubSubDirStreamReader,
     PubSubStreamSource,
+    _claim_seq,
+    _msg_name,
     publish,
 )
 
@@ -119,6 +123,62 @@ def test_reader_respect_deadline_surfaces_fault(tmp_path):
     rdr = PubSubDirStreamReader({"path": topic, "respect_deadline": "true"})
     with pytest.raises(IOError, match="injected broker fault"):
         rdr.read({"seq": 0})
+
+
+def test_reader_polls_a_missing_topic_as_empty(tmp_path):
+    """A topic nobody has published to yet is an empty poll (R3), not
+    an error, for both the stream and the backfill reader."""
+    topic = str(tmp_path / "never-published")
+    it, end = PubSubDirStreamReader({"path": topic}).read({"seq": 0})
+    assert list(it) == [] and end == {"seq": 0}
+    assert PubSubDirBatchReader({"path": topic}).end == 0
+
+
+def test_publish_never_clobbers_on_a_stale_seq_hint(tmp_path):
+    """No-clobber publish: a seq is claimed with an atomic link(), so
+    a publisher holding a stale seq hint (another publisher took that
+    seq after its listing) moves on to the next free seq and never
+    overwrites a published message."""
+    topic = str(tmp_path / "t")
+    before = [b"first", b"second", b"third"]
+    for p in before:
+        publish(topic, p)
+    staged = os.path.join(topic, ".tmp-stale")
+    with open(staged, "wb") as f:
+        f.write(b"late")
+    assert _claim_seq(topic, staged, 0) == 3  # hint 0 is long taken
+    assert [_read_msg(topic, seq) for seq in range(4)] == before + [b"late"]
+    assert not os.path.exists(staged)
+
+    # Concurrent publishers race on the same listing-derived hints.
+    topic = str(tmp_path / "race")
+    n_threads, per_thread = 4, 50
+    offsets: list[int] = []
+
+    def publisher(t: int) -> None:
+        for i in range(per_thread):
+            offsets.append(publish(topic, f"t{t}-m{i}-".encode() * 20))
+
+    threads = [threading.Thread(target=publisher, args=(t,))
+               for t in range(n_threads)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    names = os.listdir(topic)
+    msgs = sorted(n for n in names if n.endswith(".msg"))
+    total = n_threads * per_thread
+    assert len(msgs) == total and sorted(offsets) == list(range(total))
+    assert not [n for n in names if n.startswith(".tmp-")]
+    payloads = sorted(_read_msg(topic, seq) for seq in range(total))
+    assert payloads == sorted(f"t{t}-m{i}-".encode() * 20
+                              for t in range(n_threads)
+                              for i in range(per_thread))
+
+
+def _read_msg(topic: str, seq: int) -> bytes:
+    with open(os.path.join(topic, _msg_name(seq)), "rb") as f:
+        return f.read()
 
 
 def test_broker_fault_then_restart_from_checkpoint_no_loss_no_dupes(

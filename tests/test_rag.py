@@ -326,7 +326,7 @@ def test_bfs_hops_matches_python_bfs(spark):
         .filter("u <> v")
         .groupBy("u", "v")
         .count()
-        .filter(f"count >= {g._KCORE_MINW}")
+        .filter(f"count >= {g.COPURCHASE_MINW}")
         .select("u", "v")
         .collect()
     )
